@@ -1,11 +1,7 @@
 """Seeded inputs for the benchmark, made without the engine.
 
-The query tables mirror the value domains of the TPC-H-like parquet tables
-the engine's registry queries read (customer, orders, lineitem, part,
-events). The events stream is written as landing CSV files by plain Python,
-so a change to the engine cannot shift the input it is measured on.
-Money columns are whole cents, which keeps every aggregate exact in both
-Spark and the DuckDB oracle.
+The events stream is written as landing CSV files by plain Python, so a
+change to the engine cannot shift the input it is measured on.
 """
 
 from __future__ import annotations
@@ -16,111 +12,7 @@ import io
 import os
 import random
 
-import numpy as np
-import pyarrow as pa
-import pyarrow.parquet as pq
-
-#: Rows per table at scale factor 1 (TPC-H proportions of the testdata).
-_ROWS_AT_SF1 = {
-    "customer": 150_000,
-    "orders": 1_500_000,
-    "lineitem": 6_000_000,
-    "part": 200_000,
-    "events": 1_000_000,
-}
-QUERY_TABLES = tuple(_ROWS_AT_SF1)
-_SEGMENTS = ["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"]
-_PRIORITIES = ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"]
 _EVENT_TYPES = ["click", "view", "purchase", "signup", "error"]
-_PART_TYPES = ["ECONOMY", "LARGE", "MEDIUM", "PROMO", "SMALL", "STANDARD"]
-_COLORS = ["blue", "red", "green", "small", "large"]
-_NOUNS = ["anvil", "bolt", "gear", "nut", "ring", "widget", "spring", "valve",
-          "lever", "clamp", "hinge", "pipe", "screw"]
-_EPOCH = np.datetime64("1970-01-01T00:00:00", "us")
-
-
-def _days(rng, n: int, first: str, last: str) -> np.ndarray:
-    lo = np.datetime64(first, "D")
-    span = int((np.datetime64(last, "D") - lo).astype(int)) + 1
-    return (lo + rng.integers(0, span, n)).astype("datetime64[us]")
-
-
-def _cents(rng, n: int, lo: int, hi: int) -> np.ndarray:
-    return rng.integers(lo, hi + 1, n) / 100.0
-
-
-def _pick(rng, values: list[str], n: int) -> pa.Array:
-    return pa.array(np.array(values, dtype=object)[rng.integers(0, len(values), n)])
-
-
-def query_tables(seed: int, sf: float) -> dict[str, pa.Table]:
-    """The five tables the headline queries read, at scale factor *sf*."""
-    rng = np.random.default_rng(seed)
-    n = {t: max(1, int(r * sf)) for t, r in _ROWS_AT_SF1.items()}
-    nc, no, nl, np_, ne = (n[t] for t in ("customer", "orders", "lineitem", "part", "events"))
-    customer = pa.table({
-        "c_custkey": pa.array(np.arange(nc, dtype=np.int64)),
-        "c_name": pa.array([f"Customer#{i:09d}" for i in range(nc)]),
-        "c_nationkey": pa.array(rng.integers(0, 25, nc).astype(np.int32)),
-        "c_acctbal": pa.array(_cents(rng, nc, -99_999, 999_999)),
-        "c_mktsegment": _pick(rng, _SEGMENTS, nc),
-    })
-    orders = pa.table({
-        "o_orderkey": pa.array(np.arange(no, dtype=np.int64)),
-        "o_custkey": pa.array(rng.integers(0, nc, no)),
-        "o_orderstatus": _pick(rng, ["F", "O", "P"], no),
-        "o_totalprice": pa.array(_cents(rng, no, 100_000, 50_000_000)),
-        "o_orderdate": pa.array(_days(rng, no, "1995-01-01", "2001-08-01")),
-        "o_orderpriority": _pick(rng, _PRIORITIES, no),
-    })
-    lineitem = pa.table({
-        "l_orderkey": pa.array(rng.integers(0, no, nl)),
-        "l_partkey": pa.array(rng.integers(0, np_, nl)),
-        "l_suppkey": pa.array(rng.integers(0, max(1, int(10_000 * sf)), nl)),
-        "l_linenumber": pa.array(rng.integers(1, 8, nl).astype(np.int32)),
-        "l_quantity": pa.array(rng.integers(1, 51, nl).astype(np.float64)),
-        "l_extendedprice": pa.array(_cents(rng, nl, 90_000, 10_500_000)),
-        "l_discount": pa.array(rng.integers(0, 11, nl) / 100.0),
-        "l_tax": pa.array(rng.integers(0, 9, nl) / 100.0),
-        "l_returnflag": _pick(rng, ["A", "N", "R"], nl),
-        "l_linestatus": _pick(rng, ["F", "O"], nl),
-        "l_shipdate": pa.array(_days(rng, nl, "1995-01-02", "2001-11-04")),
-    })
-    keys = np.arange(np_, dtype=np.int64)
-    part = pa.table({
-        "p_partkey": pa.array(keys),
-        "p_name": pa.array([f"{_COLORS[a]} {_NOUNS[b]}" for a, b in zip(
-            rng.integers(0, len(_COLORS), np_), rng.integers(0, len(_NOUNS), np_))]),
-        "p_brand": pa.array([f"Brand#{b}" for b in rng.integers(1, 26, np_)]),
-        "p_type": _pick(rng, _PART_TYPES, np_),
-        "p_size": pa.array(rng.integers(1, 51, np_).astype(np.int32)),
-        "p_retailprice": pa.array(900.0 + (keys % 1000) / 10.0),
-    })
-    # one month of events in time order, µs resolution
-    offsets = np.sort(rng.integers(0, 30 * 86_400 * 1_000_000, ne))
-    events = pa.table({
-        "event_id": pa.array(np.arange(ne, dtype=np.int64)),
-        "ts": pa.array(np.datetime64("2024-01-01T00:00:00", "us") + offsets),
-        "user_id": pa.array(rng.integers(0, 150, ne)),
-        "event_type": _pick(rng, _EVENT_TYPES, ne),
-        "value": pa.array(np.maximum(1, np.round(rng.exponential(5_000, ne))) / 100.0),
-        "props": pa.array([f'{{"k": {k}}}' for k in rng.integers(0, 100, ne)]),
-    })
-    return {"customer": customer, "orders": orders, "lineitem": lineitem,
-            "part": part, "events": events}
-
-
-def write_query_tables(tables: dict[str, pa.Table], out_dir: str) -> None:
-    """One ``<name>.parquet`` file per table, the layout the queries read."""
-    os.makedirs(out_dir, exist_ok=True)
-    for name, table in tables.items():
-        pq.write_table(table, os.path.join(out_dir, f"{name}.parquet"))
-
-
-# --------------------------------------------------------------------------
-# Streaming landing files
-# --------------------------------------------------------------------------
-
 #: event_id = file number * ID_STRIDE + row: a row names the file it came in.
 ID_STRIDE = 1_000_000
 EVENT_HEADER = ("event_id", "ts", "user_id", "event_type")

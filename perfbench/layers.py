@@ -6,9 +6,7 @@ reads 0.
 
 from __future__ import annotations
 
-from bench import HEADLINE
-
-#: Engine module of each headline query.
+#: Engine module of each operator the reference DAG builds.
 QUERY_MODULE = {
     "master_join": "master",
     "b_sales_kpi": "business",
@@ -16,10 +14,6 @@ QUERY_MODULE = {
     "b_customer_retention": "business",
     "b_profitability_kpi": "business",
     "b_product_performance": "business",
-    "cte_revenue_report": "report",
-    "join_composite_key": "relational",
-    "scan_filter_project": "relational",
-    "topk_per_group": "relational",
 }
 QUERY_FIELDS = {
     "build_s": "s",
@@ -73,7 +67,7 @@ def query_metric(query: str, field: str) -> str:
     return f"{query_prefix(query)}.{field}"
 
 
-UNITS = {query_metric(q, f): u for q in HEADLINE for f, u in QUERY_FIELDS.items()}
+UNITS = {query_metric(q, f): u for q in QUERY_MODULE for f, u in QUERY_FIELDS.items()}
 UNITS.update(OTHER)
 
 

@@ -10,7 +10,6 @@ from __future__ import annotations
 import datetime as dt
 import math
 
-import numpy as np
 import pandas as pd
 
 
@@ -41,32 +40,10 @@ def _canon(v) -> str:
     return str(v)
 
 
-def _canon_column(s: pd.Series) -> np.ndarray:
-    """``_canon`` over a whole column, vectorized for numeric and
-    datetime dtypes."""
-    kind = s.dtype.kind
-    if kind == "f":
-        vals = s.to_numpy()
-        return np.where(np.isnan(vals), "∅", np.array([repr(v) for v in vals.tolist()], dtype=object))
-    if kind in "iub":
-        return s.astype(str).to_numpy(dtype=object)
-    if kind == "M":
-        if getattr(s.dt, "tz", None) is not None:
-            s = s.dt.tz_convert("UTC").dt.tz_localize(None)
-        a = s.to_numpy(dtype="datetime64[us]")
-        sec = np.char.replace(np.datetime_as_string(a, unit="s"), "T", " ")
-        full = np.char.replace(np.datetime_as_string(a, unit="us"), "T", " ")
-        out = np.where(a == a.astype("datetime64[D]"), np.datetime_as_string(a, unit="D"),
-                       np.where(a == a.astype("datetime64[s]"), sec, full))
-        return np.where(np.isnat(a), "∅", out).astype(object)
-    if pd.api.types.infer_dtype(s, skipna=False) == "string":
-        return s.to_numpy(dtype=object)
-    return s.map(_canon).to_numpy(dtype=object)
-
-
 def _rows(pdf: pd.DataFrame) -> list[str]:
-    cols = [_canon_column(pdf[c]) for c in sorted(pdf.columns)]
-    return sorted("\x1f".join(r) for r in zip(*cols))
+    frame = pdf[sorted(pdf.columns)]
+    return sorted("\x1f".join(_canon(v) for v in r)
+                  for r in frame.itertuples(index=False, name=None))
 
 
 def mismatch(got: pd.DataFrame, want: pd.DataFrame) -> str | None:

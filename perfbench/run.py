@@ -7,25 +7,28 @@ Run it from the root of a source tree of the engine. Workloads:
 - ``pipeline_daily``: repeated idempotent runs of the reference medallion
   DAG (generate landing files, sense, load raw, archive, master join, five
   business KPIs, ANALYZE) through ``plans.runner``. One op is one DAG run.
-- ``query_headline``: the ten ``bench.py`` headline queries over seeded
-  TPC-H-like tables, noop sink, query order shuffled per pass by the seed.
-  One op is one pass, taken as the sum of each query's median.
 - ``stream_ingest``: ``streaming.ingest.stream_landing_table`` with the
   e2e gate's validity filter and exactly-once dedup over seeded landing
-  CSV files with redeliveries. (a) a backlog drained with ``availableNow``
-  (one op is one micro-batch), then (b) a live stream fed on a schedule.
+  CSV files with redeliveries. (a) one backlog drained with ``availableNow``
+  again and again into fresh tables (one op is one micro-batch), then (b)
+  a live stream fed at a fixed rate.
+
+The headline queries are not a workload here: ``bench.py`` times them.
 
 End-to-end metrics (``--trace 0``), for every workload:
 
 - ``setup_s``: process start to the first timed op, warm-up included.
-- ``op_s``: median wall time of one op (DAG run, query pass, micro-batch).
+- ``op_s``: wall time of one op: the median DAG run; the median over the
+  backlog drains of a drain's wall per micro-batch.
 - ``rows_per_s``: rows delivered per second of op time (rows a DAG run
-  writes, rows a pass returns, rows the backlog drain ingests).
+  writes, rows a backlog drain ingests, median over the drains). The
+  checks pin these row counts and a drain's batch count is fixed, so on
+  both workloads it is ``op_s`` rescaled, kept as the throughput a user
+  reads.
 - ``latency_p50_s`` / ``latency_p90_s``: per-item latency: each table's
-  median time from DAG start until its data is written; each query's
-  median wall time; each live stream file's time from due to the
-  ``on_batch`` call of its batch.
-- ``cpu_s``: JVM plus Python CPU seconds per op.
+  median time from DAG start until its data is written; each live stream
+  file's time from due to the ``on_batch`` call of its batch.
+- ``cpu_s``: JVM plus Python CPU seconds per op (median).
 - ``peak_rss_mb``: peak resident memory of the JVM plus Python.
 - ``success_rate``: share of attempted ops that neither failed nor missed
   a correctness check (1 - error rate).
@@ -53,7 +56,7 @@ ROOT = os.path.dirname(HERE)
 DRIVER_MEM = "1536m"
 #: A run must end within three minutes; leave room for shutdown.
 DEADLINE_S = 165
-WORKLOADS = ("pipeline_daily", "query_headline", "stream_ingest")
+WORKLOADS = ("pipeline_daily", "stream_ingest")
 
 
 def _args() -> argparse.Namespace:
@@ -80,8 +83,17 @@ def _session(work: str, trace: bool):
         "spark.ui.showConsoleProgress": "false",
         "spark.ui.enabled": "true" if trace else "false",
         "spark.local.dir": f"{work}/local",
-        # a fixed heap size keeps heap growth out of the memory and time figures
+        # a fixed heap size keeps heap growth out of the memory and time
+        # figures. The JIT stops at its first tier: with the second, each
+        # DAG run still spent 4-7 s of compiler CPU after ten runs, and op
+        # times kept falling by a level that differed from JVM to JVM;
+        # with the first alone they are level from the second run on. The
+        # first tier alone defaults to a 48 MB code cache, which Spark's
+        # generated classes filled within four runs; it gets the 240 MB
+        # that the two tiers default to.
         "spark.driver.extraJavaOptions": f"-Xms{DRIVER_MEM} -XX:-UsePerfData "
+                                         "-XX:TieredStopAtLevel=1 "
+                                         "-XX:ReservedCodeCacheSize=240m "
                                          f"-Djava.io.tmpdir={work}/tmp",
         "spark.sql.streaming.numRecentProgressUpdates": "1000",
     }
