@@ -25,6 +25,7 @@ reruns/backfills byte-identical, so downstream diffing and caching work.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -108,7 +109,71 @@ SQL_EVENTS_NANSAFE = (
 #   (country x date) sums ~1.9e12 units — 480x inside the bound. Set
 #   SPARK_GRAFT_EXACT_DECIMAL_SUMS=1 to restore the literal decimal
 #   accumulator for data outside the documented domain.
+# - Spelling: the formula's text lives in one place, sql_money_unscaled
+#   and _sql_money_total below. spark.sql strings and the Column API of
+#   a column name both use it; only Column arguments go through the
+#   expression builders, which compile to the same optimized plan.
 # ---------------------------------------------------------------------------
+
+
+#: A plain or qualified column name (``income``, ``e.value``): the
+#: Column API builds its money sums for these as one ``F.expr`` of the
+#: SQL spelling below — one py4j call instead of about 16 per
+#: aggregate, with the same optimized plan. Anything else (a Column, a
+#: name needing quotes) takes the Column builders.
+_NAME = re.compile(r"[A-Za-z_][A-Za-z0-9_]*(?:\.[A-Za-z_][A-Za-z0-9_]*)*")
+
+
+def _sql_name(c: Column | str) -> str | None:
+    """``c`` as backtick-quoted SQL text when it is a plain or qualified
+    column name, else None."""
+    if isinstance(c, str) and _NAME.fullmatch(c):
+        return ".".join(f"`{part}`" for part in c.split("."))
+    return None
+
+
+# --- SQL spelling of the fast money sum: the formula's one text -----------
+
+
+def sql_money_unscaled(expr: str) -> str:
+    """SQL text of :func:`money_unscaled`. FLOOR on DOUBLE already
+    returns BIGINT in Spark SQL; ``0.5D`` is a DOUBLE literal, as in the
+    Column builder, so even the analyzed plans match."""
+    p = f"({expr}) * 1e4 + 0.5D"
+    return f"CASE WHEN {p} > -1e18 AND {p} < 1e18 THEN FLOOR({p}) END"
+
+
+def _sql_money_total(s: str) -> str:
+    """SQL text of :func:`money_total`."""
+    return f"CAST(CAST({s} AS DECIMAL(38,4)) / 10000 AS DOUBLE)"
+
+
+def sql_dsum_fast(expr: str) -> str:
+    """Spark-dialect SQL spelling of the r14 unscaled-long money sum —
+    value-identical to :func:`sql_dsum` on the money domain (see the
+    proof block above; oracle strings keep the decimal form). It also
+    backs :func:`dsum` of a column name."""
+    return _sql_money_total(f"SUM({sql_money_unscaled(expr)})")
+
+
+def sql_davg_fast(expr: str) -> str:
+    """Fast sibling of :func:`sql_davg`; backs :func:`davg` of a name."""
+    return f"{sql_dsum_fast(expr)} / COUNT({expr})"
+
+
+def sql_dsum_diff_fast(left: str, right: str) -> str:
+    """Fast sibling of :func:`sql_dsum_diff`; backs :func:`dsum_diff`
+    of two names."""
+    return _sql_money_total(
+        f"SUM({sql_money_unscaled(left)} - {sql_money_unscaled(right)})"
+    )
+
+
+# --- Column API ------------------------------------------------------------
+#
+# Column arguments are built expression by expression below; these
+# builders must stay plan-equal to the SQL spelling above
+# (tests/test_determinism_fast.py compares the optimized plans).
 
 
 def money_unscaled(c: Column | str) -> Column:
@@ -116,6 +181,9 @@ def money_unscaled(c: Column | str) -> Column:
     money-domain doubles: ``FLOOR(x·10^4 + 0.5)``, NULL outside
     (±10^18) — NaN, ±inf and decimal overflow map to NULL exactly like
     the decimal cast. See the domain/parity notes above."""
+    name = _sql_name(c)
+    if name is not None:
+        return F.expr(sql_money_unscaled(name))
     p = _col(c) * F.lit(1e4) + F.lit(0.5)
     return F.when((p > F.lit(-1e18)) & (p < F.lit(1e18)), F.floor(p))
 
@@ -134,6 +202,9 @@ def dsum(c: Column | str) -> Column:
     for the literal DECIMAL(18,4) accumulator."""
     if EXACT_DECIMAL_SUMS:
         return F.sum(dec(c)).cast("double")
+    name = _sql_name(c)
+    if name is not None:
+        return F.expr(sql_dsum_fast(name))
     return money_total(F.sum(money_unscaled(c)))
 
 
@@ -143,6 +214,9 @@ def davg(c: Column | str) -> Column:
     Matches SQL ``CAST(SUM(CAST(x AS DECIMAL(18,4))) AS DOUBLE) / COUNT(x)``
     — a single double division on deterministic operands.
     """
+    name = _sql_name(c)
+    if name is not None and not EXACT_DECIMAL_SUMS:
+        return F.expr(sql_davg_fast(name))
     return dsum(c) / F.count(_col(c))
 
 
@@ -151,18 +225,6 @@ def davg(c: Column | str) -> Column:
 
 def sql_dsum(expr: str) -> str:
     return f"CAST(SUM(CAST({expr} AS {_DECIMAL})) AS DOUBLE)"
-
-
-def sql_dsum_fast(expr: str) -> str:
-    """Spark-dialect SQL spelling of the r14 unscaled-long money sum —
-    value-identical to :func:`sql_dsum` on the money domain (see the
-    proof block above; oracle strings keep the decimal form). FLOOR on
-    DOUBLE already returns BIGINT in Spark SQL."""
-    p = f"({expr}) * 1e4 + 0.5"
-    return (
-        f"CAST(CAST(SUM(CASE WHEN {p} > -1e18 AND {p} < 1e18 "
-        f"THEN FLOOR({p}) END) AS DECIMAL(38,4)) / 10000 AS DOUBLE)"
-    )
 
 
 def sql_davg(expr: str) -> str:
@@ -213,4 +275,7 @@ def dsum_diff(left: Column | str, right: Column | str) -> Column:
     NULL iff either side is NULL — identical term-skipping."""
     if EXACT_DECIMAL_SUMS:
         return F.sum(dec(left) - dec(right)).cast("double")
+    names = _sql_name(left), _sql_name(right)
+    if None not in names:
+        return F.expr(sql_dsum_diff_fast(*names))
     return money_total(F.sum(money_unscaled(left) - money_unscaled(right)))

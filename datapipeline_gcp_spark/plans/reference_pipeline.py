@@ -22,6 +22,18 @@ Differences from the reference, all deliberate and documented:
   is the idempotent variant: dynamic partition overwrite keyed on
   ``load_date``/``dt``, so re-running one run date replaces exactly that
   run's partitions.
+- No ANALYZE step. Column statistics on the master table would feed
+  nothing: cost-based optimization is off, the catalog is in-memory, no
+  later step joins the master table, and the next run's ``insertInto``
+  resets the table's statistics to none (``DESCRIBE TABLE EXTENDED``
+  shows them gone). The step cost four Spark jobs beside the business
+  queries. ``sinks.analyze_table`` stays for deployments that turn CBO
+  on over a persistent metastore.
+- ``export_sales`` depends on the step that lands the CSV transactions
+  file it reads (``api_local.ingest_transactions_csv``), not on that
+  file's raw load: it never reads ``raw_layer``, so waiting for the load
+  only lengthened the DAG's critical path. The archive step still waits
+  for every load, so the file stays in landing while both read it.
 """
 
 from __future__ import annotations
@@ -55,6 +67,10 @@ def _load_raw(ctx: Context, fmt: str, table: str, schema, landing_dir: str, mode
         sinks.overwrite_partitions(df, target, ["load_date", "src_format"])
     else:
         sinks.append_table(df, target, partition_by=["load_date", "src_format"])
+
+
+def _never_landed(name: str):
+    raise FileNotFoundError(f"{name} never landed")
 
 
 def build_reference_pipeline(
@@ -95,7 +111,7 @@ def build_reference_pipeline(
                 lambda c, t=table, f=fmt: readers.sense_files(
                     f"{landing_dir}/{f}/{t}_{c.run_date}_*.{f}", timeout_s=15
                 )
-                or (_ for _ in ()).throw(FileNotFoundError(f"{t}.{f} never landed")),
+                or _never_landed(f"{t}.{f}"),
                 deps=[ing],
                 group=grp,
                 **kw,
@@ -123,7 +139,7 @@ def build_reference_pipeline(
 
     exp = p.step(
         "export_sales", export_sales,
-        deps=["api_local.load_transactions_csv"], group="database_sql", **kw
+        deps=["api_local.ingest_transactions_csv"], group="database_sql", **kw
     )
     load_sales = p.step(
         "load_sales",
@@ -183,17 +199,5 @@ def build_reference_pipeline(
         p.step(name, business(name), deps=[mst], group="business", **kw)
         for name in biz.BUILDERS
     ]
-    # CBO statistics on the master table (join-key + group-key columns)
-    # run alongside the business queries — they feed the NEXT run's plans.
-    stats = p.step(
-        "analyze_master",
-        lambda c: sinks.analyze_table(
-            c.spark,
-            "master_layer.m_data_model",
-            ["transaction_country", "transaction_id", "product_id"],
-        ),
-        deps=[mst],
-        **kw,
-    )
-    p.step("end", deps=biz_steps + [stats])
+    p.step("end", deps=biz_steps)
     return p

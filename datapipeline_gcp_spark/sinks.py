@@ -137,14 +137,21 @@ def overwrite_partitions(
     rerun for one run-date cannot double rows or touch other dates.
     """
     spark = df.sparkSession
-    # Dynamic overwrite mode is pinned session-wide (session.get_session)
-    # and re-asserted here — never toggled back. Set-and-restore around
-    # each write races under the pipeline's concurrent load legs: one
-    # leg's restore flips a still-pending overwrite to static, which
-    # truncates every partition of the table instead of just the leg's
-    # own. (The per-writer .option() spelling is ignored by insertInto on
-    # catalog parquet tables, so the session conf is the mechanism.)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    # Dynamic overwrite mode is pinned once per session (session.get_session)
+    # and only read here. Setting it per write would mutate session-global
+    # conf under the pipeline's concurrent load legs and stream batches,
+    # and a static mode would truncate every partition of the table
+    # instead of just the incoming ones. (The per-writer .option()
+    # spelling is ignored by insertInto on catalog parquet tables, so the
+    # session conf is the mechanism.)
+    mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
+    if mode.lower() != "dynamic":
+        raise RuntimeError(
+            f"overwrite_partitions({table!r}) needs "
+            "spark.sql.sources.partitionOverwriteMode=dynamic, the session "
+            f"has {mode!r}: build the session with session.get_session or "
+            "set the mode before any concurrent write starts"
+        )
     with _table_lock(table):
         if not spark.catalog.tableExists(table):
             df.write.format(fmt).partitionBy(*partition_by).saveAsTable(table)

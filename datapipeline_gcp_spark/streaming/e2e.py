@@ -329,6 +329,10 @@ def events_stream_idempotent_replay_gate(
     double archival fails the in-gate asserts.
     """
     pin_utc(spark)
+    # The idempotent sink needs dynamic partition overwrite, which a
+    # vanilla caller session lacks; pin it once, before the stream clones
+    # the session for its batches (sinks.overwrite_partitions only reads it).
+    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     ev = _load_events(spark, sf_dir)
     base = "/dev/shm" if os.path.isdir("/dev/shm") else None
     root = tempfile.mkdtemp(dir=base, prefix="gate_idem_")

@@ -7,6 +7,7 @@ tools/check_money_parity.py for the exhaustive data sweep."""
 from __future__ import annotations
 
 import math
+import re
 from decimal import ROUND_HALF_UP, Decimal
 
 import pytest
@@ -14,6 +15,7 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from datapipeline_gcp_spark.determinism import (
+    davg,
     dec,
     dsum,
     dsum_diff,
@@ -148,3 +150,83 @@ def test_money_total_single_rounding_beyond_2_53(spark, unscaled):
     # reference: exact rational S/10^4 -> one correctly-rounded double
     ref = float(Decimal(unscaled) / Decimal(10**4))
     assert repr(got) == repr(ref)
+
+
+# --- name form: dsum/davg/dsum_diff of a column name are one F.expr of the
+# SQL spelling; they must equal the Column-built form on every row. ------
+
+#: both sides of the ±1e18 unscaled guard: |x| just under 1e14 passes it
+#: (out of the money domain, so only form-vs-form parity is claimed),
+#: just over maps to NULL
+NEAR_GUARD = [99999999999999.98, -99999999999999.98,
+              100000000000000.02, -100000000000000.02, 2e14, -2e14]
+NAME_FIXTURE = SPECIALS + [0.0, -56.78, 12.34, 0.01, -0.01, 1.2345,
+                           -9.8765, 0.0001, 104997.88, -499978.59,
+                           99999999999.99] + NEAR_GUARD
+
+
+def _in_domain(v) -> bool:
+    return v is None or math.isnan(v) or math.isinf(v) or abs(v) <= 1e11
+
+
+@pytest.fixture(scope="module")
+def name_df(spark):
+    n = len(NAME_FIXTURE)
+    rows = [Row(id=i, x=v, y=NAME_FIXTURE[(i + 7) % n])
+            for i, v in enumerate(NAME_FIXTURE)]
+    return spark.createDataFrame(rows, "id int, x double, y double")
+
+
+def _per_row(df, s, a, d):
+    """Each row its own group, so every row's aggregate is compared."""
+    return {r.id: (r.s, r.a, r.d) for r in df.groupBy("id").agg(
+        s.alias("s"), a.alias("a"), d.alias("d")).collect()}
+
+
+def _same(got, want) -> bool:
+    return all((g is None and w is None) or repr(g) == repr(w)
+               for g, w in zip(got, want))
+
+
+def _exact_aggs():
+    return (
+        F.sum(dec("x")).cast("double"),
+        F.sum(dec("x")).cast("double") / F.count("x"),
+        F.sum(dec("x") - dec("y")).cast("double"),
+    )
+
+
+@pytest.mark.parametrize("x, y", [("x", "y"), ("e.x", "e.y")])
+def test_name_form_equals_column_form(name_df, x, y):
+    df = name_df.alias("e")
+    by_name = _per_row(df, dsum(x), davg(x), dsum_diff(x, y))
+    by_col = _per_row(df, dsum(F.col("x")), davg(F.col("x")),
+                      dsum_diff(F.col("x"), F.col("y")))
+    assert by_name.keys() == by_col.keys() == set(range(len(NAME_FIXTURE)))
+    for i in by_name:
+        assert _same(by_name[i], by_col[i]), (
+            f"x={NAME_FIXTURE[i]!r}: name={by_name[i]} column={by_col[i]}")
+
+
+def test_name_form_equals_exact_decimal_in_domain(name_df):
+    keep = [i for i, v in enumerate(NAME_FIXTURE)
+            if _in_domain(v) and _in_domain(NAME_FIXTURE[(i + 7) % len(NAME_FIXTURE)])]
+    df = name_df.where(F.col("id").isin(keep))
+    by_name = _per_row(df, dsum("x"), davg("x"), dsum_diff("x", "y"))
+    exact = _per_row(df, *_exact_aggs())
+    assert by_name.keys() == exact.keys() == set(keep)
+    for i in keep:
+        assert _same(by_name[i], exact[i]), (
+            f"x={NAME_FIXTURE[i]!r}: name={by_name[i]} exact={exact[i]}")
+    # and over one group holding every in-domain row
+    total = df.agg(dsum("x"), davg("x"), dsum_diff("x", "y")).first()
+    assert _same(tuple(total), tuple(df.agg(*_exact_aggs()).first()))
+
+
+def test_name_form_keeps_the_optimized_plan(name_df):
+    def plan(*aggs):
+        q = name_df.groupBy("id").agg(*[a.alias(f"c{i}") for i, a in enumerate(aggs)])
+        return re.sub(r"#\d+L?", "#", q._jdf.queryExecution().optimizedPlan().toString())
+
+    assert plan(dsum("x"), davg("x"), dsum_diff("x", "y")) == plan(
+        dsum(F.col("x")), davg(F.col("x")), dsum_diff(F.col("x"), F.col("y")))

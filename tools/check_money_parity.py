@@ -19,7 +19,10 @@ is not null-safe-equal to
     money_unscaled(x)                                   -- fast unscaled
 
 in BOTH Spark and DuckDB, over every SF dir given (plus the degenerate
-fixture variants when present). Exit 0 iff zero mismatches everywhere.
+fixture variants when present). On the Spark side it checks both
+spellings of the fast path: the Column builder and the SQL text
+(determinism.sql_money_unscaled), which backs spark.sql strings and the
+Column API of a column name. Exit 0 iff zero mismatches everywhere.
 
 Usage: python tools/check_money_parity.py [sf_dir ...]
        (default: /root/testdata/sf0.001 sf0.01 sf0.1 + /tmp/degenerate/*)
@@ -35,7 +38,11 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from datapipeline_gcp_spark.determinism import dec, money_unscaled  # noqa: E402
+from datapipeline_gcp_spark.determinism import (  # noqa: E402
+    dec,
+    money_unscaled,
+    sql_money_unscaled,
+)
 
 #: every (table, SQL expression) a fast money sum consumes anywhere in
 #: the engine (dsum/davg/dsum_diff call sites + business weighted sums).
@@ -69,11 +76,14 @@ def main(dirs):
             if not os.path.exists(p):
                 continue
             src = f"{p}/*.parquet" if os.path.isdir(p) else p
-            # --- Spark: exact unscaled vs fast unscaled, null-safe ---
+            # --- Spark: exact unscaled vs fast unscaled, null-safe, for
+            # the Column builder and the SQL text ---
             df = spark.read.parquet(p)
             x = F.expr(expr)
             exact_u = (dec(x) * F.lit(10000)).cast("long")
             n_spark = df.where(~exact_u.eqNullSafe(money_unscaled(x))).count()
+            sql_u = F.expr(sql_money_unscaled(expr))
+            n_sql = df.where(~exact_u.eqNullSafe(sql_u)).count()
             n_rows = df.count()
             # --- DuckDB: same comparison (oracle-side cast semantics).
             # NaN is nulled FIRST, exactly like the oracles' nansafe
@@ -94,12 +104,12 @@ def main(dirs):
                 """
             ).fetchone()[0]
             checked += 1
-            flag = "" if n_spark == 0 and n_duck == 0 else "  <-- MISMATCH"
+            flag = "" if n_spark == n_sql == n_duck == 0 else "  <-- MISMATCH"
             print(
-                f"{d} {table}.{expr}: rows={n_rows} "
-                f"spark_mismatch={n_spark} duckdb_mismatch={n_duck}{flag}"
+                f"{d} {table}.{expr}: rows={n_rows} spark_mismatch={n_spark} "
+                f"spark_sql_mismatch={n_sql} duckdb_mismatch={n_duck}{flag}"
             )
-            bad += n_spark + n_duck
+            bad += n_spark + n_sql + n_duck
     print(f"\n{checked} (dir, expr) pairs checked; total mismatches: {bad}")
     spark.stop()
     sys.exit(1 if bad else 0)
